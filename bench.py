@@ -80,16 +80,6 @@ def main() -> None:
         return dict(spark.sparkContext._jsc.getPersistentRDDs())
 
     keep = set(persistent_rdds())
-    # Between-query System.gc(): tried TWICE (docs/BENCH_NOTES), and
-    # BOTH A/Bs said no — even fired only at query boundaries (never
-    # between timed reps), the 15-query A/B measured 20.9 s with GC vs
-    # 19.7 s without, with `minhash_lsh_neardup` alone +1.5 s (the
-    # collection's concurrent phases steal CPU into the following
-    # reps). Default OFF; flag kept so the next round can re-check
-    # instead of re-arguing.
-    gc_enabled = os.environ.get("SPARK_GRAFT_BENCH_GC", "0") != "0"
-    _gc = spark.sparkContext._jvm.System.gc
-    jvm_gc = _gc if gc_enabled else (lambda: None)
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     # Comma-separated subset for smoke runs (tests/test_bench_smoke.py
     # keeps the harness itself from silently breaking between rounds).
@@ -102,7 +92,6 @@ def main() -> None:
             continue
         if only_set is not None and name not in only_set:
             continue
-        jvm_gc()
         # Adaptive reps (VERDICT r5 task 7): a query whose reps never
         # converge (spread/min above threshold) gets up to `extra_reps`
         # more attempts, so one bad scheduling window can't record a

@@ -203,12 +203,6 @@ def parallel_table(spark: SparkSession, sf_dir: str, name: str, key: str) -> Dat
     return table(spark, sf_dir, name).repartition(n, F.col(key))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every catalog table as a temp view for the SQL surface."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 from contextlib import contextmanager  # noqa: E402
 
 

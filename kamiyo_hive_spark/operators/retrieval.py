@@ -530,9 +530,7 @@ def rag_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from kamiyo_hive_spark.operators.similarity import assign_to_seed_centroids
 
-    assigned = assign_to_seed_centroids(
-        spark, sf_dir, RAG_K_CLUSTERS, materialize=True
-    )
+    assigned = assign_to_seed_centroids(spark, sf_dir, RAG_K_CLUSTERS)
     toks = _doc_toks(spark, sf_dir)  # staged distinct-token relation (r8)
     q = (
         assigned.filter(F.col("vec_id") < RAG_N_QUERIES)

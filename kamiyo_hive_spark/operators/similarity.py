@@ -116,9 +116,7 @@ def _assign_expr(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     )
 
 
-def assign_to_seed_centroids(
-    spark: SparkSession, sf_dir: str, k: int, materialize: bool = False
-) -> DataFrame:
+def assign_to_seed_centroids(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """Shared seed-centroid assignment (the SemDeDup/IVF convention):
     L2-normalize every embedding, take vec_id < k as centroids, assign
     each vector to its cosine-argmax centroid with lowest-cid
@@ -133,11 +131,9 @@ def assign_to_seed_centroids(
     (sf_dir, k) — six registered queries each re-ran the K-way
     broadcast crossJoin + argmax aggregation over the corpus (and
     within a query, every extra consumer of the lineage re-ran it
-    again, which is what `materialize=True` used to paper over with a
-    persist). Doubles and longs round-trip parquet exactly, so staged
-    values are the engine-computed ones bit-for-bit; the `materialize`
-    flag is retained for API stability but is a no-op — a staged scan
-    is already a materialized relation, and N consumers re-reading it
+    again). Doubles and longs round-trip parquet exactly, so staged
+    values are the engine-computed ones bit-for-bit; a staged scan is
+    already a materialized relation, and N consumers re-reading it
     re-scan KB of parquet instead of re-running the assignment."""
     import os
 
@@ -1111,12 +1107,6 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kamiyo_hive_spark.operators.dedup import _portable_hash
 
-    # materialize=False on purpose: the self-join's two sides share an
-    # identical subtree, so Catalyst's exchange reuse computes the
-    # assignment once inside the single final job — a persist adds a
-    # cache fill + CacheManager bookkeeping for nothing (A/B at sf0.1:
-    # 1.68 s persisted vs 1.30 s with reuse) and leaves an orphaned
-    # cache block for the session to clean (ADVICE r3).
     # ONE explicit cid exchange feeds the whole query (r8): hash(cid)
     # satisfies the window's clustering, BOTH sides of the pair
     # self-join on (cid, shard) (subset rule; exchange reuse shares the
@@ -1556,6 +1546,7 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
     from kamiyo_hive_spark.sources.txlog import TxLog
+    from kamiyo_hive_spark.streaming.jobs import bounded_replay_confs
 
     out_root = (
         f"{SCRATCH}/ann_stream_tx_{ANN_UPSERT_MOD}_{ANN_UPSERT_RES}_"
@@ -1593,21 +1584,19 @@ def streaming_ann_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            q = (
-                stream.writeStream.outputMode("append")
-                .foreachBatch(lambda df, bid: merge_batch(log, df, bid))
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            with bounded_replay_confs(stream, "append", partitions=8):
+                q = (
+                    stream.writeStream.outputMode("append")
+                    .foreachBatch(lambda df, bid: merge_batch(log, df, bid))
+                    .option("checkpointLocation", ckpt)
+                    .start()
+                )
+                try:
+                    q.processAllAvailable()
+                finally:
+                    q.stop()
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
             shutil.rmtree(ckpt, ignore_errors=True)
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
@@ -2041,9 +2030,7 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same `lsh_index_dir` layout) — the brute scan here is the recall
     oracle. Same normalize-once / round(9) / lowest-id tie-break float
     discipline as every cosine operator in this module."""
-    assigned = assign_to_seed_centroids(
-        spark, sf_dir, SEMDEDUP_K, materialize=True
-    )
+    assigned = assign_to_seed_centroids(spark, sf_dir, SEMDEDUP_K)
     anchors = assigned.filter(F.col("vec_id") < CPM_ANCHORS).select(
         F.col("vec_id").alias("anchor"),
         F.col("nv").alias("anv"),

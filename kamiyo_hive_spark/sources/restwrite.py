@@ -372,7 +372,7 @@ def streaming_rest_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     pins zero duplicate rows). The oracle recomputes the aggregate
     from the raw table: a dropped epoch, a double-published batch, or
     a lossy wire type is a hash mismatch."""
-    from kamiyo_hive_spark.streaming.jobs import _events_stream
+    from kamiyo_hive_spark.streaming.jobs import _events_stream, bounded_replay_confs
 
     stream = _events_stream(spark, sf_dir).select(
         "event_id",
@@ -385,9 +385,7 @@ def streaming_rest_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
 
     with IngestApiServer() as srv:
         spark.dataSource.register(IngestRestDataSource)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
+        with bounded_replay_confs(stream, "append"):
             q = (
                 stream.writeStream.format("rest_ingest")
                 .option("base_url", srv.base_url)
@@ -402,8 +400,6 @@ def streaming_rest_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
                 q.processAllAvailable()
             finally:
                 q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         import urllib.request
 
         with urllib.request.urlopen(srv.base_url + "/published", timeout=30) as r:

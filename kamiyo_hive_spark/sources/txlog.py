@@ -2160,6 +2160,7 @@ def _register_streaming_dv_query() -> None:
         import time as _time
 
         from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.streaming.jobs import bounded_replay_confs
 
         out_root = os.path.join(
             SCRATCH, f"txlog_dv_stream_{os.path.basename(sf_dir)}"
@@ -2210,21 +2211,19 @@ def _register_streaming_dv_query() -> None:
                 .option("maxFilesPerTrigger", "1")
                 .parquet(req)
             )
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
             try:
-                q = (
-                    stream.writeStream.outputMode("append")
-                    .foreachBatch(lambda df, bid: apply_batch(log, df, bid))
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                try:
-                    q.processAllAvailable()
-                finally:
-                    q.stop()
+                with bounded_replay_confs(stream, "append"):
+                    q = (
+                        stream.writeStream.outputMode("append")
+                        .foreachBatch(lambda df, bid: apply_batch(log, df, bid))
+                        .option("checkpointLocation", ckpt)
+                        .start()
+                    )
+                    try:
+                        q.processAllAvailable()
+                    finally:
+                        q.stop()
             finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
                 shutil.rmtree(ckpt, ignore_errors=True)
             open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
@@ -3386,7 +3385,10 @@ def _register_streaming_sink_query() -> None:
         import shutil
 
         from kamiyo_hive_spark.sources.sinks import SCRATCH, _staging_lock
-        from kamiyo_hive_spark.streaming.jobs import _events_stream
+        from kamiyo_hive_spark.streaming.jobs import (
+            _events_stream,
+            bounded_replay_confs,
+        )
 
         root = os.path.join(
             SCRATCH, f"txlog_stream_{os.path.basename(sf_dir)}"
@@ -3400,9 +3402,7 @@ def _register_streaming_sink_query() -> None:
             stream = _events_stream(spark, sf_dir).select(
                 "event_id", "event_type", "value"
             )
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            try:
+            with bounded_replay_confs(stream, "append"):
                 q = (
                     stream.writeStream.outputMode("append")
                     .foreachBatch(lambda df, bid: sink.write(df, bid))
@@ -3413,8 +3413,6 @@ def _register_streaming_sink_query() -> None:
                     q.processAllAvailable()
                 finally:
                     q.stop()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
             # Replay batch 0 (crash-recovery path): must be recognized
             # and skipped, leaving the version count untouched.
             v_before = log.version()
@@ -3664,14 +3662,18 @@ def weighted_change_feed(
 
     dv_files = {f for _paths, files, _w in dv_w for f in files}
     scan = sorted(f for f, w in file_w.items() if w != 0 or f in dv_files)
-    if not scan:
-        raise ValueError("weighted feed resolved to an empty scan")
     sch = log.table_schema()
-    reader = (
-        spark.read.schema(T.StructType.fromJson(json.loads(sch)))
-        if sch
-        else spark.read
-    )
+    schema = T.StructType.fromJson(json.loads(sch)) if sch else None
+    reader = spark.read.schema(schema) if schema else spark.read
+    if not scan:
+        # Fully telescoped history (e.g. append, then delete everything):
+        # the net feed is empty, like the head snapshot it sums to.
+        empty = (
+            spark.createDataFrame([], schema)
+            if schema
+            else reader.parquet(os.path.join(log.root, min(file_w))).limit(0)
+        )
+        return empty.select(*cols, F.lit(0).alias("_weight"))
     wmap = F.create_map(
         *[x for f in scan for x in (F.lit(f), F.lit(file_w.get(f, 0)))]
     )
@@ -4236,6 +4238,7 @@ def _register_cdf_stream_query() -> None:
         bound; at any table size the per-batch cost tracks the delta,
         never the table."""
         from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
+        from kamiyo_hive_spark.streaming.jobs import bounded_replay_confs
 
         table_root = cdf_table(spark, sf_dir)
         out = os.path.join(SCRATCH, f"txlog_cdf_stream_{os.path.basename(sf_dir)}")
@@ -4285,9 +4288,7 @@ def _register_cdf_stream_query() -> None:
             .alias("total_price"),
         )
         name = "cdf_tail_mem"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
+        with bounded_replay_confs(agg, "complete"):
             q = (
                 agg.writeStream.outputMode("complete")
                 .format("memory")
@@ -4298,8 +4299,6 @@ def _register_cdf_stream_query() -> None:
                 q.processAllAvailable()
             finally:
                 q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         return spark.table(name).orderBy("o_orderstatus")
 
 

@@ -23,6 +23,9 @@ append/update so state and output stay incremental.
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,12 +59,56 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PROGRESS_SINK: list | None = None
 
 
-import contextlib  # noqa: E402
+# Checkpoint commits of a bounded replay. Without libhadoop, Spark's
+# default FileContext manager resolves every rename through
+# `RawLocalFileSystem.getFileLinkStatus`, which forks a `readlink` per
+# offset, commit, delta and `.crc` file (a warm `streaming_dedup_keys`
+# request at sf0.01 on a 4-core host: 982 forks, ~230 with this one).
+# The FileSystem manager's fail-if-exists check is check-then-rename
+# and `File.renameTo` overwrites, so it is only safe on a checkpoint no
+# other query writes: a memory sink's temp dir, a `mkdtemp` dir, or a
+# directory held under `sinks._staging_lock` / built by
+# `ensure_staging`. Shared production checkpoints keep the default.
+_PRIVATE_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_BOUNDED_OUTPUT_MODES = ("append", "complete", "update")
+
+
+def _emits_on_watermark(result: DataFrame) -> bool:
+    """Whether an append-mode query holds rows back until the watermark
+    passes them — a streaming aggregation (append mode requires it to
+    be watermarked) or a stream-stream outer join — so that its last
+    rows come out in the engine's no-data batch."""
+    todo = [result._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if not node.isStreaming():
+            continue
+        name = node.nodeName()
+        if name == "Aggregate" or (
+            name == "Join"
+            and node.joinType().toString() in ("LeftOuter", "RightOuter", "FullOuter")
+            and node.right().isStreaming()
+            and node.left().isStreaming()
+        ):
+            return True
+        children = node.children()
+        todo += [children.apply(i) for i in range(children.size())]
+    return False
 
 
 @contextlib.contextmanager
-def bounded_replay_confs(spark: SparkSession, partitions: int):
-    """Session confs for a BOUNDED replay streaming run, restored after.
+def bounded_replay_confs(
+    result: DataFrame,
+    mode: str,
+    partitions: int = 4,
+    no_data_batches: bool = False,
+):
+    """Session confs for one BOUNDED streaming run of `result` in
+    output `mode` with a checkpoint private to the run; each is restored
+    after, to its prior value or to unset, also on exception.
 
     - `spark.sql.shuffle.partitions`: the state store creates one
       instance per shuffle partition for the life of the query; a host
@@ -72,53 +119,56 @@ def bounded_replay_confs(spark: SparkSession, partitions: int):
       operators (applyInPandasWithState / TWS) are per-key CPU-bound in
       the Python workers and WANT parallelism (16 measured fastest) —
       those call sites override `partitions`.
-    - `noDataMicroBatches` OFF (r11, guide §1.2 "don't compute things
-      you throw away"): the engine's extra empty batch exists to
-      advance the watermark and evict/emit state on an IDLE UNBOUNDED
-      stream; a drained bounded replay never needs it, and it costs a
-      full trigger cycle (queryPlanning + walCommit + a state-store
-      commit per partition — streaming_profile measured the interval
-      join paying a 5th batch at its full ~1 s marginal cost). It
-      cannot change any bounded query's result: complete mode
-      re-emits unchanged state, the dedup/append emissions happen in
-      their data batch, the stream-stream join is INNER (eviction
-      emits nothing; only outer joins emit on eviction), and the
-      stateful operators run NoTimeout (no timer callbacks to fire).
-      Production unbounded jobs keep the engine default; the live
-      runner (streaming/live.py) also keeps it unless the caller is a
-      bounded complete-mode feed, because append-mode watermark
-      emission on a live bus DOES flush via no-data batches
-      (tests/test_streaming_live.py pins that behavior).
+    - `noDataMicroBatches` OFF unless `no_data_batches` (r11, guide
+      §1.2 "don't compute things you throw away"): the engine's extra
+      empty batch exists to advance the watermark and evict/emit state
+      on an IDLE UNBOUNDED stream; a drained bounded replay never needs
+      it, and it costs a full trigger cycle (queryPlanning + walCommit
+      + a state-store commit per partition — streaming_profile measured
+      the interval join paying a 5th batch at its full ~1 s marginal
+      cost). No bounded result changes in complete or update mode
+      (the stateful operators run NoTimeout: no timer fires in an empty
+      batch), nor in append mode unless the query holds rows back for
+      the watermark (`_emits_on_watermark`, refused before anything
+      starts). Append-mode live feeds flush their windows in a no-data
+      batch and pass `no_data_batches=True` (tests/test_streaming_live.py).
+    - `checkpointFileManagerClass`: `_PRIVATE_CKPT_MANAGER`, see above.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    mode = mode.lower()
+    if mode not in _BOUNDED_OUTPUT_MODES:
+        raise ValueError(f"unknown output mode {mode!r}")
+    if not no_data_batches and mode == "append" and _emits_on_watermark(result):
+        raise ValueError(
+            "append-mode query emits on watermark advance; its last rows "
+            "need no-data batches (pass no_data_batches=True)"
+        )
+    spark = result.sparkSession
+    confs = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(no_data_batches).lower(),
+        "spark.sql.streaming.checkpointFileManagerClass": _PRIVATE_CKPT_MANAGER,
+    }
+    set_now = spark.conf.getAll
+    prior = {k: set_now.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
-        # NOT here: StateStore.stop() between bounded runs (unloading
-        # the stopped query's providers instead of waiting for the 60 s
-        # maintenance tick) — A/B'd NEGATIVE/NEUTRAL r11: 3 alternating
-        # same-session passes of the 11-query streaming list measured
-        # 23.7/21.4/21.6 s without vs 21.9/21.9/21.7 s with, per-query
-        # ratios mixed ±9%. Dead providers at these state sizes cost
-        # nothing measurable; the unload stayed out (recorded in
-        # OPTIMIZATION_r11.md so the next round re-checks instead of
-        # re-arguing).
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        # NOT here: StateStore.stop() between bounded runs — A/B'd
+        # neutral in r11 (OPTIMIZATION_r11.md): dead providers at these
+        # state sizes cost nothing measurable.
 
 
 def _run_to_completion(
     result: DataFrame, name: str, mode: str, partitions: int = 4
 ) -> None:
-    spark = result.sparkSession
-    with bounded_replay_confs(spark, partitions):
+    with bounded_replay_confs(result, mode, partitions):
         q = (
             result.writeStream.outputMode(mode)
             .format("memory")
@@ -457,12 +507,11 @@ def _multibatch_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -
     source (maxFilesPerTrigger=1) delivers a genuine multi-micro-batch
     stream — state must survive across batches, not just within one."""
     import glob
-    import os
     import time
 
-    from kamiyo_hive_spark.sources.sinks import ensure_staging
+    from kamiyo_hive_spark.sources import sinks
 
-    out = f"/root/repo/.scratch/events_stream_{os.path.basename(sf_dir)}"
+    out = os.path.join(sinks.SCRATCH, f"events_stream_{os.path.basename(sf_dir)}")
     # Staging is cached, but ONLY for the exact source file: the driver
     # regenerates testdata between rounds, and a stale staging would
     # make every streaming query diverge from its batch oracle.
@@ -484,7 +533,7 @@ def _multibatch_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -
         for i, path in enumerate(sorted(glob.glob(os.path.join(tmp, "part-*")))):
             os.utime(path, (base + i, base + i))
 
-    return ensure_staging(out, source, build)
+    return sinks.ensure_staging(out, source, build)
 
 
 from kamiyo_hive_spark.operators.stateful import QUORUM, T1, T2  # noqa: E402
@@ -533,16 +582,8 @@ def streaming_commit_reveal_stateful(spark: SparkSession, sf_dir: str) -> DataFr
     as `commit_reveal_sessions`, now surviving micro-batch boundaries."""
     import pandas as pd
 
-
-    src = _multibatch_events_dir(spark, sf_dir)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("user_id", "event_id", "ts", "event_type", "value")
+    stream = _events_stream(spark, sf_dir).select(
+        "user_id", "event_id", "ts", "event_type", "value"
     )
 
     out_schema = (
@@ -740,8 +781,6 @@ def streaming_commit_reveal_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution — the unbounded-stream production form of
     `commit_reveal_sessions` (state scales past memory, supports
     timers/TTL for deadline-close triggers at cluster scale)."""
-    src = _multibatch_events_dir(spark, sf_dir)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     prev_provider = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
@@ -751,13 +790,8 @@ def streaming_commit_reveal_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .select("user_id", "event_id", "ts", "event_type", "value")
+        stream = _events_stream(spark, sf_dir).select(
+            "user_id", "event_id", "ts", "event_type", "value"
         )
         out_schema = (
             "user_id long, n_commits long, winning_bid double, "
@@ -936,21 +970,16 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _idempotent_sink_run(spark: SparkSession, sf_dir: str, reset: bool) -> DataFrame:
     """Run the foreachBatch exactly-once sink job; with reset=False the
     query restarts from the existing checkpoint (replay/restart path)."""
-    import contextlib
-    import os
-    import shutil
-
-    from kamiyo_hive_spark.sources.sinks import _staging_lock
+    from kamiyo_hive_spark.sources import sinks
 
     tag = os.path.basename(sf_dir)
-    sink = f"/root/repo/.scratch/idempotent_sink_{tag}"
-    ckpt = f"/root/repo/.scratch/idempotent_ckpt_{tag}"
+    sink = os.path.join(sinks.SCRATCH, f"idempotent_sink_{tag}")
+    ckpt = os.path.join(sinks.SCRATCH, f"idempotent_ckpt_{tag}")
     # A checkpointed streaming run mutates sink+ckpt incrementally, so
     # (unlike the batch stagings) it can't build-then-rename; hold the
     # cross-process staging lock for the run instead so two sessions
     # never interleave on the same checkpoint.
-    with contextlib.ExitStack() as stack:
-        stack.enter_context(_staging_lock(sink))
+    with sinks._staging_lock(sink):
         return _idempotent_sink_run_locked(spark, sf_dir, reset, sink, ckpt)
 
 
@@ -975,9 +1004,7 @@ def _idempotent_sink_run_locked(
         # transactional sinks.
         batch_df.write.mode("overwrite").parquet(f"{sink}/batch_id={batch_id}")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with bounded_replay_confs(agg, "update"):
         q = (
             agg.writeStream.outputMode("update")
             .foreachBatch(write_batch)
@@ -988,8 +1015,6 @@ def _idempotent_sink_run_locked(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     from pyspark.sql import Window
 

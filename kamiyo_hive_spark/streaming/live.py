@@ -49,6 +49,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kamiyo_hive_spark.streaming.jobs import bounded_replay_confs
+
 EVENTS_WIRE_SCHEMA = (
     "event_id long, ts_us long, user_id long, event_type string, "
     "value double, props string"
@@ -322,17 +324,7 @@ def run_live_to_completion(
     driver polls for the expected rows). Append-mode callers must keep
     the default: their closed-window emission FLUSHES via a no-data
     batch (tests/test_streaming_live.py pins that)."""
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    if not no_data_batches:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-    try:
+    with bounded_replay_confs(result, mode, partitions, no_data_batches):
         q = (
             result.writeStream.outputMode(mode)
             .format("memory")
@@ -359,8 +351,3 @@ def run_live_to_completion(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )

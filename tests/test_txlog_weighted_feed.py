@@ -11,6 +11,7 @@ a copy-on-write rewrite (removed + added, no DVs).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.functions.money import cents
@@ -96,3 +97,26 @@ def test_weighted_feed_equals_unioned_feeds(spark, tmp_path):
         .collect()
     }
     assert via_weights == head
+
+
+@pytest.mark.parametrize("recorded_schema", [True, False])
+def test_weighted_feed_of_fully_deleted_history_is_empty(
+    spark, tmp_path, recorded_schema
+):
+    log = TxLog.init(str(tmp_path / "gone"))
+    rows = [(i, f"G{i % 3}", float(i) + 0.25) for i in range(30)]
+    df = spark.createDataFrame(rows, "k long, grp string, price double")
+    if recorded_schema:
+        log.append(df)
+    else:  # a raw commit records no schema; the footer supplies it
+        log.commit("append", log._write_stage(df, log.stage_dir()))
+    assert bool(log.table_schema()) == recorded_schema
+    # delete everything as one metadata-only commit (a TRUNCATE): every
+    # file's +1 at v0 cancels its -1 at v1, so nothing is left to scan
+    log.commit("rewrite", [], log.snapshot_files(), read_version=0)
+    assert log.snapshot_files() == []
+
+    feed = weighted_change_feed(log, spark, ["grp", "price"])
+    assert feed.columns == ["grp", "price", "_weight"]
+    assert dict(feed.dtypes)["_weight"] == "int"
+    assert _agg(feed.withColumnRenamed("_weight", "_w")) == {}

@@ -2,7 +2,7 @@
 
 A from-scratch, Spark-first re-expression of the query and
 data-processing capabilities of the reference system (kamiyo-ai/kamiyo-hive,
-surveyed in /root/repo/SURVEY.md), plus the LLM-data-pipeline operator
+surveyed in SURVEY.md at the repository root), plus the LLM-data-pipeline operator
 families (dedup, similarity search, text analysis, multimodal plumbing)
 needed by a 100 TB-scale training-data pipeline.
 

@@ -52,7 +52,9 @@ def _guarded_subunit_sum(total: Column) -> Column:
     round-tripping exactly (see EXACT_DOUBLE_BOUND)."""
     if not _guard_enabled():
         return total
-    ok = F.abs(total) < F.lit(EXACT_DOUBLE_BOUND)
+    # A NULL total (empty frame, all-NULL group) passes through as NULL,
+    # as the unguarded sum does.
+    ok = total.isNull() | (F.abs(total) < F.lit(EXACT_DOUBLE_BOUND))
     err = F.assert_true(
         ok,
         F.concat(

@@ -1373,10 +1373,14 @@ def _bucketed_fp_table(
     the same CLUSTERED BY spec over the staged files.
     """
     import os
+    import re
 
     from kamiyo_hive_spark.sources.sinks import SCRATCH, ensure_staging
 
-    slug = os.path.basename(sf_dir).replace(".", "_")
+    # The slug becomes part of an unquoted table identifier, so every
+    # character outside [A-Za-z0-9_] (the `.` of `sf0.01`, the `-` of
+    # `sf0.01-<digest>`) maps to `_`.
+    slug = re.sub(r"\W", "_", os.path.basename(sf_dir), flags=re.ASCII)
     tbl = f"{name}_{slug}"
     out = f"{SCRATCH}/{tbl}"
     source = os.path.join(sf_dir, "documents.parquet")

@@ -14,6 +14,16 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Entries in Spark's generated-code cache (`CodeGenerator`, keyed by the
+# generated source text; Spark's default is 100). Measured at sf0.01 on
+# local[4]: the 27 timed `dashboard_pipeline` queries compile 388
+# distinct classes, so at 100 entries the LRU evicted each class before
+# its reuse and every warm pass re-ran Janino 374 times. One cold pass
+# over all 234 bench queries compiles 2,674 distinct classes, so 4096
+# holds the registry's whole working set with headroom
+# (docs/BENCH_NOTES.md, "Generated-code cache").
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def quiet_query_context_logs() -> None:
     """Silence PySpark 4's Python-side exception loggers.
@@ -25,9 +35,10 @@ def quiet_query_context_logs() -> None:
     conflict probes, optimistic-commit retries, capability probes; see
     docs/BENCH_NOTES.md "Benign ERROR lines"). The exception object
     still propagates to the caller unchanged, so dropping the log
-    mirror loses nothing: bench.py's per-query ``err`` field and pytest
-    failures remain the real error signal, while bench/drive stderr
-    stops carrying scary JVM stack traces for survived probes."""
+    mirror loses nothing: a query that really fails still raises
+    (bench.py stops at it; pytest and the drive scripts report it),
+    while bench/drive stderr stops carrying scary JVM stack traces for
+    survived probes."""
     for name in ("DataFrameQueryContextLogger", "SQLQueryContextLogger"):
         lg = logging.getLogger(name)
         lg.setLevel(logging.CRITICAL + 1)
@@ -47,9 +58,15 @@ def get_spark(
     - Session timezone pinned to UTC so event-time semantics match the
       DuckDB oracle (naive-UTC timestamps) bit-for-bit.
     - Arrow enabled for every pandas interchange (toPandas, pandas UDFs).
+    - Generated-code cache sized to the registry's working set
+      (``CODEGEN_CACHE_ENTRIES``): a repeated query shape reuses its
+      compiled classes instead of re-running Janino. The cache is a
+      static conf of the JVM, so it takes effect only when this call
+      creates the session.
     - Opt-in persistent metastore: ``SPARK_GRAFT_HIVE=1`` enables Hive
       support over a local Derby metastore (path pinned by
-      ``SPARK_GRAFT_METASTORE_DIR``, default `.scratch/metastore`), so
+      ``SPARK_GRAFT_METASTORE_DIR``, default ``metastore`` under
+      ``sinks.SCRATCH``), so
       `init_warehouse` DDL survives session restarts — the local twin
       of the cluster deployment's shared Hive metastore. Default stays
       the in-memory catalog: Derby allows ONE process at a time, which
@@ -76,13 +93,16 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
     if os.environ.get("SPARK_GRAFT_HIVE") == "1":
+        from kamiyo_hive_spark.sources import sinks
+
         ms_dir = os.environ.get(
-            "SPARK_GRAFT_METASTORE_DIR", "/root/repo/.scratch/metastore"
+            "SPARK_GRAFT_METASTORE_DIR", os.path.join(sinks.SCRATCH, "metastore")
         )
         os.makedirs(ms_dir, exist_ok=True)
         builder = (

@@ -26,7 +26,11 @@ from kamiyo_hive_spark.catalog import table
 from kamiyo_hive_spark.functions.money import dec, money_sum, money_sum_col
 from kamiyo_hive_spark.plans.registry import register
 
-SCRATCH = "/root/repo/.scratch"
+# Staging root: `.scratch` at the top of the checkout this package lives in.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
 
 
 def staging_current(out: str, source) -> bool:

@@ -5,6 +5,8 @@ result must be identical to the broadcast siblings."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from kamiyo_hive_spark.operators.dedup import (
@@ -18,6 +20,19 @@ from kamiyo_hive_spark.operators.dedup import (
 def test_bucketed_matches_exact_variant(spark, sf_dir):
     a = sorted(map(tuple, incremental_dedup_new_docs(spark, sf_dir).collect()))
     b = sorted(map(tuple, incremental_dedup_bucketed(spark, sf_dir).collect()))
+    assert a == b
+    assert len(a) > 0
+
+
+def test_bucketed_accepts_any_data_dir_name(spark, sf_dir, tmp_path):
+    """The data-dir basename becomes part of a table identifier; a `-`
+    (as in `sf0.001-<digest>`) once raised INVALID_IDENTIFIER."""
+    import shutil
+
+    copy = str(tmp_path / f"{os.path.basename(sf_dir)}-copy")
+    shutil.copytree(sf_dir, copy)
+    a = sorted(map(tuple, incremental_dedup_new_docs(spark, copy).collect()))
+    b = sorted(map(tuple, incremental_dedup_bucketed(spark, copy).collect()))
     assert a == b
     assert len(a) > 0
 

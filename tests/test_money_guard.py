@@ -86,6 +86,14 @@ def test_guard_passes_below_bound(spark, monkeypatch):
     assert fast == exact == 4.0
 
 
+def test_guard_passes_null_total_of_empty_frame(spark, monkeypatch):
+    # An empty frame sums to NULL on both paths; the guard must let the
+    # NULL through rather than raise on it.
+    monkeypatch.setenv("SPARK_GRAFT_MONEY_GUARD", "1")
+    fast, exact = _sum_both_paths(spark, [])
+    assert fast is None and exact is None
+
+
 def test_guard_off_plan_unchanged(spark, monkeypatch):
     # The bench/production contract: with the guard off the emitted
     # expression is exactly the pre-guard one (no CASE WHEN wrapper).

@@ -48,7 +48,7 @@ def _run_hive(code: str, ms_dir: str) -> str:
         capture_output=True,
         text=True,
         env=env,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         timeout=300,
     )
     assert proc.returncode == 0, proc.stdout + "\n" + proc.stderr
